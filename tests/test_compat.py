@@ -1,8 +1,17 @@
 """MapReduce compatibility facade: lifecycle, generality, error paths."""
 
+import random
+import re
+from collections import Counter
+
 import pytest
 
-from mapreduce_framework_api_spark.compat.mapreduce import MapReduceJob, mr_create
+from mapreduce_framework_api_spark.compat.mapreduce import (
+    MapReduceJob,
+    mr_create,
+    wordcount_map,
+    wordcount_reduce,
+)
 
 
 def test_lifecycle_and_result(spark, tmp_path):
@@ -48,9 +57,67 @@ def test_finish_writes_formatted_sink(spark, tmp_path):
     assert elapsed >= 0
 
 
-def test_map_error_fails_job(spark, tmp_path):
+def _mixed_corpus(n_lines: int, seed: int) -> str:
+    """Lines of digit, upper-, lower- and mixed-case tokens joined by
+    spaces, hyphens and apostrophes (the tokenizer's separators)."""
+    rng = random.Random(seed)
+    words = ["alpha", "Alpha", "ALPHA", "beta", "Beta", "x9", "9x", "007", "42", "Zeta", "zeta", "q"]
+    seps = [" ", "-", "'", " - ", "' "]
+    out = []
+    for _ in range(n_lines):
+        toks = [rng.choice(words) for _ in range(rng.randint(0, 12))]
+        out.append("".join(t + rng.choice(seps) for t in toks) + "\n")
+    return "".join(out)
+
+
+@pytest.mark.parametrize("partitions, n_lines", [(8, 2000), (32, 0)])
+def test_finish_sink_across_reducers(spark, tmp_path, partitions, n_lines):
+    """With several reducers the sink still writes one globally sorted
+    file, byte for byte what a single-threaded count produces; an empty
+    input gives no rows and an empty file."""
+    text = _mixed_corpus(n_lines, seed=7)
+    p = tmp_path / "in.txt"
+    p.write_text(text)
+    out = tmp_path / "out.txt"
+    want = sorted(Counter(re.findall(r"[A-Za-z0-9]+", text)).items())
+    job = mr_create(wordcount_map, wordcount_reduce, partitions=partitions).start(spark, str(p))
+    assert job.result() == want
+    job.finish(str(out))
+    assert out.read_bytes() == "".join("%s, %d\n" % kv for kv in want).encode()
+
+
+def test_job_shape_one_job_two_stages(spark, tmp_path):
+    """start() submits no Spark job; result() runs exactly one job of two
+    stages (map with combine, then reduceByKey) — the sort happens at the
+    sink, not in the lineage."""
+    p = tmp_path / "in.txt"
+    p.write_text(_mixed_corpus(500, seed=3))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "test-compat-job-shape"
+
+    def group_jobs():
+        # the status store is fed by the async listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return sorted(tracker.getJobIdsForGroup(group))
+
+    sc.setJobGroup(group, "mr job shape")
+    try:
+        job = mr_create(wordcount_map, wordcount_reduce, partitions=32).start(spark, str(p))
+        assert group_jobs() == []
+        job.result()
+        jobs = group_jobs()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(jobs) == 1
+    assert len(tracker.getJobInfo(jobs[0]).stageIds) == 2
+
+
+@pytest.mark.parametrize("partitions", [1, 32])
+def test_map_error_fails_job(spark, tmp_path, partitions):
     """mr_finish propagates a nonzero map status as failure
-    (``mapreduce.c:201-212``) — here a raising map_fn fails the job."""
+    (``mapreduce.c:201-212``) — here a raising map_fn fails the job, and
+    the failure surfaces when the job runs, not from the lazy start()."""
     p = tmp_path / "in.txt"
     p.write_text("boom\n")
 
@@ -58,7 +125,7 @@ def test_map_error_fails_job(spark, tmp_path):
         raise ValueError("map failure")
         yield  # pragma: no cover
 
-    job = mr_create(bad_map, lambda a, b: a + b).start(spark, str(p))
+    job = mr_create(bad_map, lambda a, b: a + b, partitions=partitions).start(spark, str(p))
     with pytest.raises(Exception):
         job.result()
 

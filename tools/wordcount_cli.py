@@ -16,8 +16,11 @@ Stderr contract mirrors the reference binary's ``.rodata`` strings byte for
 byte (``Usage: ...``, ``ERROR: mr_create() cannot create mr instance.``,
 ``ERROR: mr_start() failed; (ret=%d).``, ``ERROR: mr_finish() failed;
 (ret=%d).``), with each failure reported at the same stage boundary: a
-missing input file surfaces from mr_start (the reference opens the input
-fd there), sink/write failures from mr_finish.
+missing input file surfaces from mr_start through its existence check (the
+reference opens the input fd there; ``start`` itself is lazy and runs no
+Spark job), while map failures and sink/write failures surface from
+mr_finish, which runs the job (the reference's mr_finish returns the map
+status, ``mapreduce.c:201-212``).
 """
 
 from __future__ import annotations
